@@ -68,7 +68,10 @@ object BenchExtra {
     for (_ <- 0 until rounds; n <- wanted) {
       val t = timeOnce(n)
       spark.catalog.clearCache()
-      best(n) = best.get(n).filter(_ >= 0).map(math.min(_, t)).getOrElse(t)
+      // a failed round (-1) never replaces a valid best; -1 stays only when
+      // every round failed
+      if (t >= 0 || !best.contains(n))
+        best(n) = best.get(n).filter(_ >= 0).fold(t)(math.min(_, t))
     }
     best.foreach { case (n, t) => println(f"[benchextra] $n%-40s ${t}%.3f s") }
     if (profile) {

@@ -71,7 +71,12 @@ object GraphOps {
     * eagerly checkpointed every `checkpointInterval` rounds so the logical
     * plan stays bounded (a few join/agg levels between cuts — fewer job
     * boundaries than per-round cuts, same total work) and per-round cost is
-    * one shuffle join + one groupBy on node ids. Pass `checkpointDir` for
+    * one shuffle join + one groupBy on node ids. Each round references the
+    * previous rank frame twice (probe side and contribution side), so the
+    * logical plan between materializations holds ~2^`checkpointInterval`
+    * copies of the last cut's subtree: 32 at the default 5 (exchanges are
+    * reused at runtime), but analysis cost grows exponentially for a large
+    * interval — keep it small. Pass `checkpointDir` for
     * reliable (executor-loss-surviving) checkpoints on a real cluster —
     * same save/restore-the-global-dir contract as
     * [[graft.canon.ConnectedComponents.run]]. Dangling mass (no-out-edge
@@ -416,36 +421,36 @@ object GraphOps {
                   checkpointDir: Option[String] = None,
                   maxDegree: Int = 1000000): DataFrame =
     graft.tables.Checkpoints.withDir(edges.sparkSession, checkpointDir) { materialize =>
-      // one adjacency array per node, neighbors sorted ascending so the
-      // kernel's first-minimum tie-break equals the window's (hash, dst)
-      // order; degree-bounded loudly (the cooccurEdges guard discipline:
-      // a 10⁶-neighbor hub row is ~20 MB — beyond maxDegree the caller
-      // must pre-slice its hubs, not silently build gigarows)
-      val adj = edges
-        .groupBy(col("src"))
-        .agg(sort_array(collect_set(col("dst"))).as("_adj"))
-        .select(col("src"),
-          when(size(col("_adj")) <= maxDegree, col("_adj"))
-            .otherwise(raise_error(concat(
-              lit(s"randomWalks: node degree exceeds maxDegree=$maxDegree at '"),
-              col("src"), lit("'")))).as("adj"))
-        .persist()
-      val starts = adj.select(col("src"))
-        .select(col("src"),
-          explode(array((0 until walksPerNode).map(w => lit(w.toString)): _*)).as("w"))
-        .select(concat_ws("#", col("src"), col("w")).as("walk_id"),
-          col("src").as("node"))
-      var frontier = materialize(starts)
-      val levels = Seq.newBuilder[DataFrame]
-      levels += frontier.withColumn("step", lit(0))
-      for (i <- 1 to walkLen) {
-        frontier = materialize(walkHop(frontier, adj, i))
-        levels += frontier.withColumn("step", lit(i))
+      // scoped: the adjacency cache is released when the maxDegree guard throws
+      graft.tables.Checkpoints.scoped { cache =>
+        // one adjacency array per node, neighbors sorted ascending so the
+        // kernel's first-minimum tie-break equals the window's (hash, dst)
+        // order; degree-bounded loudly (the cooccurEdges guard discipline:
+        // a 10⁶-neighbor hub row is ~20 MB — beyond maxDegree the caller
+        // must pre-slice its hubs, not silently build gigarows)
+        val adj = cache(edges
+          .groupBy(col("src"))
+          .agg(sort_array(collect_set(col("dst"))).as("_adj"))
+          .select(col("src"),
+            when(size(col("_adj")) <= maxDegree, col("_adj"))
+              .otherwise(raise_error(concat(
+                lit(s"randomWalks: node degree exceeds maxDegree=$maxDegree at '"),
+                col("src"), lit("'")))).as("adj")))
+        val starts = adj.select(col("src"))
+          .select(col("src"),
+            explode(array((0 until walksPerNode).map(w => lit(w.toString)): _*)).as("w"))
+          .select(concat_ws("#", col("src"), col("w")).as("walk_id"),
+            col("src").as("node"))
+        var frontier = materialize(starts)
+        val levels = Seq.newBuilder[DataFrame]
+        levels += frontier.withColumn("step", lit(0))
+        for (i <- 1 to walkLen) {
+          frontier = materialize(walkHop(frontier, adj, i))
+          levels += frontier.withColumn("step", lit(i))
+        }
+        levels.result().reduce(_ unionByName _)
+          .select("walk_id", "step", "node")
       }
-      val out = levels.result().reduce(_ unionByName _)
-        .select("walk_id", "step", "node")
-      adj.unpersist()
-      out
     }
 
   /** One walk step over the adjacency frame — the seam the plan pin
@@ -454,10 +459,6 @@ object GraphOps {
     * in-row [[graft.functions.MinHashPick]] argmin. No Window, no
     * row_number, no per-edge row expansion.
     */
-  /** [[walkHop]] for the round-6 plan-capture main (package-private seam). */
-  def walkHopForPlanDump(frontier: DataFrame, adj: DataFrame,
-                         step: Int): DataFrame = walkHop(frontier, adj, step)
-
   private[operators] def walkHop(frontier: DataFrame, adj: DataFrame,
                                  step: Int): DataFrame =
     frontier.join(adj, frontier("node") === adj("src"))

@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.canon.ConnectedComponents
 import graft.link.{Embedder, Linker}
 import graft.model.WikidataJson
-import graft.tables.{Lineage, MergeTable}
+import graft.tables.{Checkpoints, Lineage, MergeTable}
 import graft.triples.Triples
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,6 +13,14 @@ import org.apache.spark.sql.functions._
   * canonicalize → materialize nodes/edges/triples, every stage checkpointed
   * with per-partition lineage rows and MERGE-idempotent writes so a killed
   * job resumes exactly (stage markers keyed by input snapshot).
+  *
+  * One stage chain serves the full build (`run`, `ingest(_, delta = false)`)
+  * and the delta ingest (`ingest(_, delta = true)`); the modes differ in
+  * their input pages, stage names and marker keys, plus two delta-only
+  * steps: batch-restricted texts/mentions reads and the id-flag OR-fold
+  * (see `chain`). Every stage goes through one helper that caches its
+  * frame in a [[Checkpoints.scoped]] scope, so a stage that throws leaves
+  * no cache behind.
   *
   * Wide operations, by stage:
   *  - harvest:  groupBy(id) (S7 OR-merge agg) — one shuffle
@@ -77,22 +85,31 @@ final class KgPipeline(spark: SparkSession, root: String,
     if (failAfterStage.contains(stage))
       throw new RuntimeException(s"injected failure after stage $stage")
 
+  /** One stage: unless `name@key` already committed, build `frame` (by
+    * name, so a resumed stage skips its side effects too), cache it across
+    * `write` (the MERGE, scoped MERGE or replace) and the lineage capture,
+    * and release it when the stage ends or throws. Returns the output
+    * snapshot.
+    */
+  private def stage(name: String, key: Long)(frame: => DataFrame)(write: DataFrame => Long): Long = {
+    val out = lineage.runStage(name, key) {
+      Checkpoints.scoped { cache =>
+        val t0 = System.nanoTime()
+        val df = cache(frame)
+        val snap = write(df)
+        lineage.capture(name, key, df, (System.nanoTime() - t0) / 1000000)
+        snap
+      }
+    }
+    checkFail(name)
+    out
+  }
+
   /** Run (or resume) the pipeline; returns the triples snapshot id. */
   def run(): Long = {
     // stage: ingest — the corpus lands as a MERGE table (idempotent by url)
-    val pagesSnap = lineage.runStage("ingest", 0L) {
-      val t0 = System.nanoTime()
-      val df = PagesGen.pages(spark, nPages)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = pagesTbl.merge(df)
-      lineage.capture("ingest", 0L, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-    checkFail("ingest")
-    val out = runFrom(pagesSnap)
-    retention.foreach(expireHistory(_))
-    out
+    val pagesSnap = stage("ingest", 0L)(PagesGen.pages(spark, nPages))(pagesTbl.merge)
+    finish(chain(pagesSnap, pagesTbl.read(), delta = false))
   }
 
   /** Incremental ingest: MERGE a batch of new/changed pages (upsert by url)
@@ -115,9 +132,12 @@ final class KgPipeline(spark: SparkSession, root: String,
     */
   def ingest(newPages: org.apache.spark.sql.DataFrame, delta: Boolean = false): Long = {
     val pagesSnap = pagesTbl.merge(newPages)
-    val out = if (delta) runDelta(newPages, pagesSnap) else runFrom(pagesSnap)
+    finish(chain(pagesSnap, if (delta) newPages else pagesTbl.read(), delta))
+  }
+
+  private def finish(triplesSnap: Long): Long = {
     retention.foreach(expireHistory(_))
-    out
+    triplesSnap
   }
 
   /** All of the pipeline's tables, for maintenance sweeps. */
@@ -139,206 +159,142 @@ final class KgPipeline(spark: SparkSession, root: String,
     (results.map(_._1.size).sum, results.map(_._2.size).sum)
   }
 
-  private def runFrom(pagesSnap: Long): Long = {
-
-    // Option-backed memo instead of lazy vals: the finally block below must
-    // unpersist ONLY what a stage actually forced (unpersisting a lazy would
-    // first materialize it), and it must run on the failure path too — a
-    // killed/failed ingest in a long-lived driver must not leak the cached
-    // corpus frames (failAfterStage exercises exactly this path).
-    var payloadsRef: Option[org.apache.spark.sql.Dataset[PagePayload]] = None
-    def payloads = payloadsRef.getOrElse {
-      val p = TextifyStage.payloads(spark, pagesTbl.read()).persist()
-      payloadsRef = Some(p); p
-    }
-    var resolvedRef: Option[org.apache.spark.sql.Dataset[(PagePayload, Map[String, String])]] = None
-    try {
-
-    // stage: harvest — per-language label dimension (id, lang, label,
-    // is_property, aliases) from the corpus itself: the reference normalizes
-    // the whole DB once per LANGUAGE (src/wikidataDB.py:126-148)
-    val labelsSnap = lineage.runStage("harvest", pagesSnap) {
-      val t0 = System.nanoTime()
-      val df = TextifyStage.harvestLabels(spark, payloads)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = labelsTbl.merge(df)
-      lineage.capture("harvest", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-    checkFail("harvest")
-
-    // stage: harvest_ids — P1 explode + S7 OR-merge aggregation
-    lineage.runStage("harvest_ids", pagesSnap) {
-      val t0 = System.nanoTime()
-      val df = payloads
-        .flatMap(pp => WikidataJson.parseLine(pp.payload).toSeq.flatMap(WikidataJson.extractEntityIds(_, "en")))
-        .toDF("id", "in_wikipedia", "is_property")
-        .groupBy("id")
-        .agg(max("in_wikipedia").as("in_wikipedia"), max("is_property").as("is_property"))
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = idFlagsTbl.merge(df)
-      lineage.capture("harvest_ids", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-    checkFail("harvest_ids")
-
-    // one gather-join feeds BOTH textify and docs (the two renderers resolve
-    // the same (url → label map) frame); persisting it halves the pipeline's
-    // biggest shuffle (refs explode + label join + per-url regroup)
-    def resolved = resolvedRef.getOrElse {
-      val r = TextifyStage.withLabelMaps(
-        spark, gatePayloads(payloads), labelsTbl.read()).persist()
-      resolvedRef = Some(r); r
-    }
-
-    // stage: textify — byte-identical extracted text per url (gated)
-    val textsSnap = lineage.runStage("textify", labelsSnap) {
-      val t0 = System.nanoTime()
-      val df = TextifyStage.renderResolved(spark, resolved)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = textsTbl.mergeScoped(df, urlScope(pagesTbl.read()))
-      lineage.capture("textify", labelsSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-    checkFail("textify")
-
-    // stage: mentions — Aho-Corasick over the label+alias trie, built via the
-    // size-guarded sharded path (single broadcast while the dictionary fits,
-    // hash-sharded multi-pass beyond the budget — never an unguarded
-    // full-dimension collect)
-    val mentionsSnap = lineage.runStage("mentions", textsSnap) {
-      val t0 = System.nanoTime()
-      val df = Linker.mentionsSharded(spark, textsTbl.read(), mentionDict(),
-        broadcastBudgetChars = mentionBudgetChars)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = mentionsTbl.mergeScoped(df, urlScope(pagesTbl.read()))
-      lineage.capture("mentions", textsSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-    checkFail("mentions")
-
-    // stage: link — batched stand-in embeddings + cosine top-K per mention.
-    // Entity vectors persist in their own MERGE table so incremental (delta)
-    // ingests embed only touched pages, never the whole corpus.
-    val linksSnap = lineage.runStage("link", mentionsSnap) {
-      val t0 = System.nanoTime()
-      val texts = textsTbl.read()
-      vecsTbl.mergeScoped(Embedder.embedDataset(
-        texts.select("id", "text").as[(String, String)]).toDF("id", "vec"),
-        idScope(pagesTbl.read(), "id"))
-      val df = Linker.link(spark, mentionsTbl.read(), vecsTbl.read(), linkK)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = linksTbl.mergeScoped(df, urlScope(pagesTbl.read()))
-      lineage.capture("link", mentionsSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-    checkFail("link")
-
-    // stage: docs — token-budget chunking + batched embedding into the
-    // vector-document table, deterministic _id = qid_lang_chunkIdx (the
-    // reference's stage 3: docker/3_Add_Wikidata_to_AstraDB/run.py:65-93,
-    // chunk T6, sink S8 — upsert by _id replaces the infinite-retry push).
-    // Label resolution is the gather-join (renderChunks), not a driver
-    // collect of the label dimension.
-    lineage.runStage("docs", textsSnap) {
-      val t0 = System.nanoTime()
-      val chunks = TextifyStage.renderChunksResolved(spark, resolved, maxTokens = 120)
-      val df = Embedder.embedDataset(
-        chunks.select("doc_id", "text").as[(String, String)]).toDF("doc_id", "vec")
-        .join(chunks, Seq("doc_id"))
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = docsTbl.mergeScoped(df, idScope(pagesTbl.read(), "qid"))
-      lineage.capture("docs", textsSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-    checkFail("docs")
-
-    // stage: triples — statement extraction with label-resolution joins
-    val triplesSnap = lineage.runStage("triples", labelsSnap) {
-      val t0 = System.nanoTime()
-      val df = Triples.fromLines(spark, payloads.map(_.payload),
-        labelsTbl.read().filter(col("lang") === "en").select("id", "label"))
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = triplesTbl.mergeScoped(df, idScope(pagesTbl.read(), "qid"))
-      lineage.capture("triples", labelsSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-    checkFail("triples")
-
-    // stage: canon — CC over sameAs edges, canonical = min id per component.
-    // Edges land in their own MERGE table first, so delta ingests can extend
-    // the edge set without re-parsing the corpus.
-    val canonSnap = lineage.runStage("canon", triplesSnap) {
-      val t0 = System.nanoTime()
-      sameAsTbl.mergeScoped(sameAsEdges(payloads), idScope(pagesTbl.read(), "src"))
-      val nodes = labelsTbl.read().filter(col("lang") === "en").select("id")
-      // optional alias-identity candidate edges (north-star "alias/sameAs
-      // edges"): gated + chained, see AliasEdges; off by default because
-      // shared-surface identity is a policy choice, not dump semantics
-      val edges = aliasEdgeMaxIds.fold(sameAsTbl.read()) { maxIds =>
-        sameAsTbl.read().unionByName(
-          graft.canon.AliasEdges.edges(labelsTbl.read(), maxIds = maxIds))
-      }
-      val df = ConnectedComponents.run(spark, edges, nodes)
-        .withColumnRenamed("component", "canonical")
-      val snap = canonTbl.replace(df)
-      lineage.capture("canon", triplesSnap, df, (System.nanoTime() - t0) / 1000000)
-      snap
-    }
-    checkFail("canon")
-
-    // stage: materialize — nodes + edges with canonical ids rewritten
-    lineage.runStage("materialize", canonSnap)(materializeStage(canonSnap))
-    checkFail("materialize")
-
-    triplesSnap
-    } finally {
-      // drop the run-scoped caches on success AND failure — a long-lived
-      // driver running (or retrying) repeated ingests must not accumulate
-      // cached corpus copies
-      resolvedRef.foreach(_.unpersist())
-      payloadsRef.foreach(_.unpersist())
-    }
-  }
-
-  /** Nodes + edges from the materialized tables (fully table-driven — shared
-    * by the full and delta paths).
+  /** The derived stages over `pages`, which the pages table holds as of
+    * `pagesSnap`; returns the triples snapshot.
+    *
+    * Full mode (`pages` = the whole table) keys each stage's marker by its
+    * upstream table's snapshot. Delta mode (`pages` = the batch) names each
+    * stage `delta_<stage>` and keys it by `pagesSnap`; its per-page stages
+    * read only the batch's texts and mentions, and harvest_ids folds in the
+    * existing flags of the batch's ids. No delta stage re-reads or re-parses
+    * the corpus: an increment costs O(batch) work plus the (edge-set-sized)
+    * canonicalization, never O(corpus).
     */
-  private def materializeStage(canonSnap: Long): Long = {
-    val t0 = System.nanoTime()
-    val canon = canonTbl.read()
-    val nodes = labelsTbl.read().filter(col("lang") === "en")
-      .join(canon, Seq("id"), "left")
-      .select(col("id"), coalesce(col("canonical"), col("id")).as("canonical"),
-        col("label"), col("is_property"))
-    nodesTbl.replace(nodes)
+  private def chain(pagesSnap: Long, pages: DataFrame, delta: Boolean): Long =
+    Checkpoints.scoped { cache =>
+      def step(name: String, upstream: Long)(frame: => DataFrame)(write: DataFrame => Long) =
+        if (delta) stage(s"delta_$name", pagesSnap)(frame)(write)
+        else stage(name, upstream)(frame)(write)
+      def ofBatch(df: DataFrame) =
+        if (delta) df.join(pages.select("url"), Seq("url"), "left_semi") else df
+      def enLabels = labelsTbl.read().filter(col("lang") === "en")
 
-    val linkEdges = linksTbl.read().filter(col("rank") === 1)
-      .join(textsTbl.read().select(col("url"), col("id").as("src")), Seq("url"))
-      .select(col("src"), col("qid").as("dst"), lit("mentions").as("kind"))
-    val sameAs = sameAsTbl.read().withColumn("kind", lit("sameAs"))
-    val canonSrc = canon.select(col("id").as("src"), col("canonical").as("src_canon"))
-    val canonDst = canon.select(col("id").as("dst"), col("canonical").as("dst_canon"))
-    val edges = linkEdges.unionByName(sameAs)
-      .join(canonSrc, Seq("src"), "left")
-      .join(canonDst, Seq("dst"), "left")
-      .select(
-        coalesce(col("src_canon"), col("src")).as("src"),
-        coalesce(col("dst_canon"), col("dst")).as("dst"),
-        col("kind"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-    val snap = edgesTbl.replace(edges)
-    lineage.capture("materialize", canonSnap, edges, (System.nanoTime() - t0) / 1000000)
-    snap
-  }
+      // lazy: a resumed run whose stages are all marked done never builds
+      // (or caches) these
+      lazy val payloads = cache(TextifyStage.payloads(spark, pages))
+      // one gather-join feeds BOTH textify and docs (the two renderers
+      // resolve the same (url → label map) frame); caching it halves the
+      // pipeline's biggest shuffle (refs explode + label join + per-url regroup)
+      lazy val resolved = cache(TextifyStage.withLabelMaps(
+        spark, gatePayloads(payloads), labelsTbl.read()))
+
+      // harvest — per-language label dimension (id, lang, label,
+      // is_property, aliases) from the corpus itself: the reference
+      // normalizes the whole DB once per LANGUAGE (src/wikidataDB.py:126-148)
+      val labelsSnap = step("harvest", pagesSnap)(
+        TextifyStage.harvestLabels(spark, payloads))(labelsTbl.merge)
+
+      // harvest_ids — P1 explode + S7 OR-merge aggregation
+      step("harvest_ids", pagesSnap) {
+        val flags = payloads
+          .flatMap(pp => WikidataJson.parseLine(pp.payload).toSeq.flatMap(WikidataJson.extractEntityIds(_, "en")))
+          .toDF("id", "in_wikipedia", "is_property")
+        // delta: fold in the existing flags of just the touched ids
+        // (semi-join), so a true flag never regresses to false across
+        // batches (readOrEmpty: a delta ingest may be the root's first-ever
+        // operation)
+        val all = if (!delta) flags else flags.unionByName(idFlagsTbl.readOrEmpty(flags)
+          .join(flags.select("id").distinct(), Seq("id"), "left_semi"))
+        all.groupBy("id")
+          .agg(max("in_wikipedia").as("in_wikipedia"), max("is_property").as("is_property"))
+      }(idFlagsTbl.merge)
+
+      // textify — byte-identical extracted text per url (gated)
+      val textsSnap = step("textify", labelsSnap)(
+        TextifyStage.renderResolved(spark, resolved))(textsTbl.mergeScoped(_, urlScope(pages)))
+
+      // mentions — Aho-Corasick over the label+alias trie, built via the
+      // size-guarded sharded path (single broadcast while the dictionary
+      // fits, hash-sharded multi-pass beyond the budget — never an
+      // unguarded full-dimension collect)
+      val mentionsSnap = step("mentions", textsSnap)(
+        Linker.mentionsSharded(spark, ofBatch(textsTbl.read()), mentionDict(),
+          broadcastBudgetChars = mentionBudgetChars))(mentionsTbl.mergeScoped(_, urlScope(pages)))
+
+      // link — batched stand-in embeddings + cosine top-K per mention.
+      // Entity vectors persist in their own MERGE table so delta ingests
+      // embed only touched pages, never the whole corpus.
+      step("link", mentionsSnap) {
+        vecsTbl.mergeScoped(Embedder.embedDataset(
+          ofBatch(textsTbl.read()).select("id", "text").as[(String, String)]).toDF("id", "vec"),
+          idScope(pages, "id"))
+        Linker.link(spark, ofBatch(mentionsTbl.read()), vecsTbl.read(), linkK)
+      }(linksTbl.mergeScoped(_, urlScope(pages)))
+
+      // docs — token-budget chunking + batched embedding into the
+      // vector-document table, deterministic _id = qid_lang_chunkIdx (the
+      // reference's stage 3: docker/3_Add_Wikidata_to_AstraDB/run.py:65-93,
+      // chunk T6, sink S8 — upsert by _id replaces the infinite-retry push).
+      // Label resolution is the gather-join (renderChunks), not a driver
+      // collect of the label dimension.
+      step("docs", textsSnap) {
+        val chunks = TextifyStage.renderChunksResolved(spark, resolved, maxTokens = 120)
+        Embedder.embedDataset(
+          chunks.select("doc_id", "text").as[(String, String)]).toDF("doc_id", "vec")
+          .join(chunks, Seq("doc_id"))
+      }(docsTbl.mergeScoped(_, idScope(pages, "qid")))
+
+      // triples — statement extraction with label-resolution joins
+      val triplesSnap = step("triples", labelsSnap)(
+        Triples.fromLines(spark, payloads.map(_.payload), enLabels.select("id", "label")))(
+        triplesTbl.mergeScoped(_, idScope(pages, "qid")))
+
+      // canon — CC over sameAs edges, canonical = min id per component.
+      // Edges land in their own MERGE table first, so delta ingests extend
+      // the edge set without re-parsing the corpus; CC then runs over the
+      // (small) edge+node tables — O(graph), not O(corpus).
+      val canonSnap = step("canon", triplesSnap) {
+        sameAsTbl.mergeScoped(sameAsEdges(payloads), idScope(pages, "src"))
+        // optional alias-identity candidate edges (north-star "alias/sameAs
+        // edges"): gated + chained, see AliasEdges; off by default because
+        // shared-surface identity is a policy choice, not dump semantics
+        val edges = aliasEdgeMaxIds.fold(sameAsTbl.read()) { maxIds =>
+          sameAsTbl.read().unionByName(
+            graft.canon.AliasEdges.edges(labelsTbl.read(), maxIds = maxIds))
+        }
+        ConnectedComponents.run(spark, edges, enLabels.select("id"))
+          .withColumnRenamed("component", "canonical")
+      }(canonTbl.replace)
+
+      // materialize — nodes + edges with canonical ids rewritten, fully
+      // table-driven
+      step("materialize", canonSnap) {
+        val canon = canonTbl.read()
+        val linkEdges = linksTbl.read().filter(col("rank") === 1)
+          .join(textsTbl.read().select(col("url"), col("id").as("src")), Seq("url"))
+          .select(col("src"), col("qid").as("dst"), lit("mentions").as("kind"))
+        val sameAs = sameAsTbl.read().withColumn("kind", lit("sameAs"))
+        val canonSrc = canon.select(col("id").as("src"), col("canonical").as("src_canon"))
+        val canonDst = canon.select(col("id").as("dst"), col("canonical").as("dst_canon"))
+        linkEdges.unionByName(sameAs)
+          .join(canonSrc, Seq("src"), "left")
+          .join(canonDst, Seq("dst"), "left")
+          .select(
+            coalesce(col("src_canon"), col("src")).as("src"),
+            coalesce(col("dst_canon"), col("dst")).as("dst"),
+            col("kind"))
+          .filter(col("src") =!= col("dst"))
+          .distinct()
+      } { edges =>
+        nodesTbl.replace(enLabels
+          .join(canonTbl.read(), Seq("id"), "left")
+          .select(col("id"), coalesce(col("canonical"), col("id")).as("canonical"),
+            col("label"), col("is_property")))
+        edgesTbl.replace(edges)
+      }
+
+      triplesSnap
+    }
 
   /** The J4 driving gate: only in_wikipedia entities are textified/chunked,
     * exactly the reference's stage-3 driving scan
@@ -374,145 +330,5 @@ final class KgPipeline(spark: SparkSession, root: String,
       .flatMap(pp => WikidataJson.parseLine(pp.payload).toSeq.flatMap(WikidataJson.toClaimRows(_, "en")))
       .filter(r => r.pid == PagesGen.sameAsPid && r.isQidValue)
       .map(r => (r.qid, r.valueScalar)).toDF("src", "dst")
-  }
-
-  /** Delta-only ingest chain: per-page stages run over THIS BATCH's pages
-    * only; global artifacts (id flags, canon, nodes/edges) update from the
-    * materialized tables. No stage re-reads or re-parses the full corpus —
-    * at 10^12 docs an increment costs O(batch) work plus the (edge-set-sized)
-    * canonicalization, never O(corpus).
-    */
-  private def runDelta(newPages: DataFrame, pagesSnap: Long): Long = {
-    val payloads = TextifyStage.payloads(spark, newPages).persist()
-    val batchUrls = newPages.select("url")
-
-    // mirror runFrom: unpersist on failure too (memo because a resumed run
-    // whose per-page stages are all marked done never forces `resolved`)
-    var resolvedRef: Option[org.apache.spark.sql.Dataset[(PagePayload, Map[String, String])]] = None
-    try {
-
-    lineage.runStage("delta_harvest", pagesSnap) {
-      val t0 = System.nanoTime()
-      val df = TextifyStage.harvestLabels(spark, payloads)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = labelsTbl.merge(df)
-      lineage.capture("delta_harvest", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-
-    lineage.runStage("delta_harvest_ids", pagesSnap) {
-      val t0 = System.nanoTime()
-      val batchFlags = payloads
-        .flatMap(pp => WikidataJson.parseLine(pp.payload).toSeq.flatMap(WikidataJson.extractEntityIds(_, "en")))
-        .toDF("id", "in_wikipedia", "is_property")
-      // S7 OR-merge across batches: fold in the existing flags of just the
-      // touched ids (semi-join), so a true flag never regresses to false
-      // (readOrEmpty: a delta ingest may be the root's first-ever operation)
-      val existing = idFlagsTbl.readOrEmpty(batchFlags)
-        .join(batchFlags.select("id").distinct(), Seq("id"), "left_semi")
-      val df = batchFlags.unionByName(existing)
-        .groupBy("id")
-        .agg(max("in_wikipedia").as("in_wikipedia"), max("is_property").as("is_property"))
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = idFlagsTbl.merge(df)
-      lineage.capture("delta_harvest_ids", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-
-    def resolved = resolvedRef.getOrElse {
-      val r = TextifyStage.withLabelMaps(
-        spark, gatePayloads(payloads), labelsTbl.read()).persist()
-      resolvedRef = Some(r); r
-    }
-
-    lineage.runStage("delta_textify", pagesSnap) {
-      val t0 = System.nanoTime()
-      val df = TextifyStage.renderResolved(spark, resolved)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = textsTbl.mergeScoped(df, urlScope(newPages))
-      lineage.capture("delta_textify", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-
-    def batchTexts = textsTbl.read().join(batchUrls, Seq("url"), "left_semi")
-
-    lineage.runStage("delta_mentions", pagesSnap) {
-      val t0 = System.nanoTime()
-      val df = Linker.mentionsSharded(spark, batchTexts, mentionDict(),
-        broadcastBudgetChars = mentionBudgetChars)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = mentionsTbl.mergeScoped(df, urlScope(newPages))
-      lineage.capture("delta_mentions", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-
-    lineage.runStage("delta_link", pagesSnap) {
-      val t0 = System.nanoTime()
-      vecsTbl.mergeScoped(Embedder.embedDataset(
-        batchTexts.select("id", "text").as[(String, String)]).toDF("id", "vec"),
-        idScope(newPages, "id"))
-      val batchMentions = mentionsTbl.read().join(batchUrls, Seq("url"), "left_semi")
-      val df = Linker.link(spark, batchMentions, vecsTbl.read(), linkK)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = linksTbl.mergeScoped(df, urlScope(newPages))
-      lineage.capture("delta_link", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-
-    lineage.runStage("delta_docs", pagesSnap) {
-      val t0 = System.nanoTime()
-      val chunks = TextifyStage.renderChunksResolved(spark, resolved, maxTokens = 120)
-      val df = Embedder.embedDataset(
-        chunks.select("doc_id", "text").as[(String, String)]).toDF("doc_id", "vec")
-        .join(chunks, Seq("doc_id"))
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = docsTbl.mergeScoped(df, idScope(newPages, "qid"))
-      lineage.capture("delta_docs", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-
-    val triplesSnap = lineage.runStage("delta_triples", pagesSnap) {
-      val t0 = System.nanoTime()
-      val df = Triples.fromLines(spark, payloads.map(_.payload),
-        labelsTbl.read().filter(col("lang") === "en").select("id", "label"))
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = triplesTbl.mergeScoped(df, idScope(newPages, "qid"))
-      lineage.capture("delta_triples", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-
-    // global graph artifacts: extend the edge set with the batch's sameAs
-    // rows, then recompute CC over the (small) edge+node tables — O(graph),
-    // not O(corpus)
-    val canonSnap = lineage.runStage("delta_canon", pagesSnap) {
-      val t0 = System.nanoTime()
-      sameAsTbl.mergeScoped(sameAsEdges(payloads), idScope(newPages, "src"))
-      val nodes = labelsTbl.read().filter(col("lang") === "en").select("id")
-      // mirror runFrom: optional alias-identity edges over the (updated)
-      // labels table, so delta and full recompute converge on the same graph
-      val edges = aliasEdgeMaxIds.fold(sameAsTbl.read()) { maxIds =>
-        sameAsTbl.read().unionByName(
-          graft.canon.AliasEdges.edges(labelsTbl.read(), maxIds = maxIds))
-      }
-      val df = ConnectedComponents.run(spark, edges, nodes)
-        .withColumnRenamed("component", "canonical")
-      val snap = canonTbl.replace(df)
-      lineage.capture("delta_canon", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      snap
-    }
-
-    lineage.runStage("delta_materialize", pagesSnap)(materializeStage(canonSnap))
-    triplesSnap
-    } finally {
-      resolvedRef.foreach(_.unpersist())
-      payloads.unpersist()
-    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.tables
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Eager materialization with a choice of durability — the one pattern
   * behind every "compute once, release the inputs" lifecycle in this
@@ -52,4 +52,22 @@ object Checkpoints {
 
   def eager(df: DataFrame, dir: Option[String] = None): DataFrame =
     withDir(df.sparkSession, dir)(materialize => materialize(df))
+
+  /** The frames one [[scoped]] call has persisted. */
+  final class Cache private[Checkpoints] {
+    private[Checkpoints] var held = List.empty[Dataset[_]]
+    /** Persist `ds` until the enclosing scope exits. */
+    def apply[T](ds: Dataset[T]): Dataset[T] = { held ::= ds.persist(); ds }
+  }
+
+  /** Run `body` with a `cache` function whose frames are all unpersisted
+    * when `body` returns OR throws — a failed stage or guard in a
+    * long-lived driver must not leave its cached frames behind. Frames are
+    * registered only when `cache` is called, so a `lazy val` that is never
+    * forced is never persisted (nor released).
+    */
+  def scoped[A](body: Cache => A): A = {
+    val cache = new Cache
+    try body(cache) finally cache.held.foreach(_.unpersist())
+  }
 }

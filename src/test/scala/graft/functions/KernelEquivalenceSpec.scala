@@ -92,11 +92,12 @@ class KernelEquivalenceSpec extends AnyFunSuite {
   }
 
   test("RemoveCovered == filter(!array_contains) portable form") {
-    // covered sets of varying density, incl. empty, full, out-of-range
+    // covered sets of varying density, incl. empty, full, out-of-range,
+    // and a null set on every 7th doc
     val staged = corpus.select(col("doc_id"), wordsCol(col("text")).as("w"))
-      .withColumn("cov",
+      .withColumn("cov", when(col("doc_id") % 7 =!= 0,
         filter(transform(sequence(lit(1L), lit(15L)),
-          j => when(pmod(col("doc_id") + j, lit(3)) === 0, j)), x => x.isNotNull))
+          j => when(pmod(col("doc_id") + j, lit(3)) === 0, j)), x => x.isNotNull)))
     assertSame(staged.select(
       TextKernels.removeCovered(col("w"), col("cov")).as("a"),
       filter(col("w"), (_, i) =>

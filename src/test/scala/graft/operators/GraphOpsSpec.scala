@@ -440,9 +440,12 @@ class GraphOpsSpec extends AnyFunSuite {
   test("random walks: maxDegree guard fails loudly on an over-degree hub") {
     import org.apache.spark.sql.functions._
     val edges = (0 until 50).map(i => ("hub", s"n$i")).toDF("src", "dst")
+    spark.catalog.clearCache() // other suites share the session
     val e = intercept[Exception] {
       GraphOps.randomWalks(edges, walkLen = 1, maxDegree = 10).count()
     }
+    assert(org.apache.spark.sql.graftbridge.Bridge.cacheIsEmpty(spark),
+      "the failed walk left its adjacency cache behind")
     assert(e.getMessage.contains("maxDegree") ||
       Option(e.getCause).exists(_.getMessage.contains("maxDegree")),
       s"unexpected: $e")

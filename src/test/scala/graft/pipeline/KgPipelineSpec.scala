@@ -5,6 +5,7 @@ import graft.model.WikidataJson
 import graft.textify.{LangVariant, Textifier}
 import graft.triples.Triples
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -371,6 +372,19 @@ class KgPipelineSpec extends AnyFunSuite {
     assert(deltaP.textsTbl.read().filter(col("id") === newQid).count() == 1)
     assert(deltaP.triplesTbl.read().filter(col("qid") === newQid).count() > 0)
 
+    // every delta stage wrote its lineage rows and its marker, keyed by the
+    // pages snapshot the batch merged into
+    val deltaStages = Seq("harvest", "harvest_ids", "textify", "mentions", "link",
+      "docs", "triples", "canon", "materialize").map("delta_" + _)
+    val lineageStages = deltaP.lineage.lineageRows().select("stage").distinct()
+      .as[String].collect().toSet
+    assert(deltaStages.toSet.subsetOf(lineageStages), s"lineage stages: $lineageStages")
+    val pagesSnap = deltaP.pagesTbl.currentSnapshot.get
+    deltaStages.foreach { s =>
+      assert(Files.exists(java.nio.file.Paths.get(deltaRoot, "_stages", s"$s@$pagesSnap")),
+        s"no marker $s@$pagesSnap")
+    }
+
     // changed-page delta: the edited page's own rows update in place; other
     // pages' rows are untouched (links referencing the changed entity refresh
     // lazily — the documented delta contract)
@@ -411,6 +425,28 @@ class KgPipelineSpec extends AnyFunSuite {
     val staleMentions = deltaP.mentionsTbl.read()
       .filter(col("url") === PagesGen.urlOf(PagesGen.qid(9)) && col("end") > newText.length)
     assert(staleMentions.count() == 0, "mentions beyond the new text length must be deleted")
+  }
+
+  test("a stage that throws releases its caches (full run and delta ingest)") {
+    val small = 60L
+    val dir = Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "kgtest-leak-").toString
+    // a labels table in the legacy id-keyed layout: the harvest MERGE's
+    // layout check throws after the stage frame is cached
+    new graft.tables.MergeTable(spark, s"$dir/labels", Seq("id"))
+      .merge(Seq(("Q1", "en", "legacy")).toDF("id", "lang", "label"))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val payload = PagesGen.entityJson(2, small, mapper).replace(PagesGen.qid(2), "Q666666")
+    val batch = Seq((PagesGen.urlOf("Q666666"), new java.sql.Timestamp(2100000000000L),
+      s"""<html><body><script id="wd-entity" type="application/json">$payload</script></body></html>"""
+        .getBytes("UTF-8"), "", "en")).toDF("url", "warc_ts", "html", "text", "lang")
+
+    spark.catalog.clearCache() // other suites share the session
+    val p = new KgPipeline(spark, dir, nPages = small)
+    intercept[IllegalStateException] { p.run() }
+    assert(Bridge.cacheIsEmpty(spark), "full run leaked a cache")
+    intercept[IllegalStateException] { p.ingest(batch, delta = true) }
+    assert(Bridge.cacheIsEmpty(spark), "delta ingest leaked a cache")
   }
 
   test("a killed job resumes exactly: same final tables as an uninterrupted run") {
